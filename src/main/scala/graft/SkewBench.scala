@@ -390,11 +390,11 @@ object SkewBench {
       rec(scale, "asof_unionwindow", time(force(asof(graft.ops.UnionWindow)))._1)
 
       // trailing-window aggregate on the SAME hot history: entity 77's
-      // labels and clicks share one hour, so the bucket join would
-      // materialize |labels77| x |clicks77| pairs — the prefix-sum path
-      // must stay sort-bounded (this is exactly the case it exists for)
+      // labels and clicks share one hour, so a bucket join would
+      // materialize |labels77| x |clicks77| pairs — the sort-merge kernel
+      // must stay sort-bounded
       rec(scale, "pit_window_prefix",
-        time(force(graft.ops.PitWindowAgg.trailingAggPrefix(
+        time(force(graft.ops.PitWindowAgg.trailingAgg(
           labels, clicks, "user_id", "lts", "ts", "value", 3600L)))._1)
 
       // bucketized range join; at 10× the hot hour must trip AQE skew split

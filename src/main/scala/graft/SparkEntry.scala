@@ -25,23 +25,15 @@ import graft.transform.SqlTransform
 object SparkEntry {
 
   /** Read a harness table; TIMESTAMP_NTZ columns (plain parquet
-    * timestamp[ms]) are cast to session-TZ (UTC) TIMESTAMP so epoch math and
-    * oracle comparisons agree (DuckDB treats naive parquet timestamps as
-    * epoch-UTC; so do we). */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          acc.withColumn(f.name, col(f.name).cast("timestamp"))
-        case _ => acc
-      }
-    }
-  }
+    * timestamps) are read as TIMESTAMP instants at the scan so epoch math
+    * and oracle comparisons agree (DuckDB treats naive parquet timestamps
+    * as epoch-UTC; so do we, in any session time zone). */
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.Readers.parquetAsInstants(s, s"$dir/$name.parquet")
 
   /** events.ts normalized to micros TIMESTAMP whatever the file encodes
     * (nanos int64 or micros NTZ — testdata has shipped both); see
-    * [[graft.sources.Readers.normalizeTs]]. */
+    * [[graft.sources.Readers.eventsNormalized]]. */
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.sources.Readers.eventsNormalized(s, dir)
 
@@ -599,17 +591,7 @@ object SparkEntry {
       ev.filter(col("ts") >= cut), "event_type")
   }
 
-  /** The prefix-sum skew path must give bit-identical answers to the
-    * bucket join — same oracle SQL as pit_window_agg. */
-  private def pitWindowAggPrefixQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    PitWindowAgg.trailingAggPrefix(
-      ev.filter(col("event_type") === "purchase"),
-      ev.filter(col("event_type") === "click"),
-      "user_id", "ts", "ts", "value", windowSec = 3600L)
-  }
-
-  /** The window LADDER (1h/6h/24h) in one join: count+sum of clicks per
+  /** The window LADDER (1h/6h/24h) in one merge pass: count+sum of clicks per
     * purchase label across all three trailing windows. */
   private def pitWindowLadderQ(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
@@ -4947,7 +4929,7 @@ object SparkEntry {
     "label_window"      -> (labelWindowQ _),
     "validate_gate"     -> (validateGate _),
     "pit_window_ladder" -> (pitWindowLadderQ _),
-    "pit_window_agg_prefix" -> (pitWindowAggPrefixQ _),
+    "pit_window_agg_prefix" -> (pitWindowAggQ _), // same kernel, kept name
     "drift_psi"         -> (driftPsiQ _),
     "drift_categorical" -> (driftCatQ _),
     "pmi_collocations"  -> (pmiCollocationsQ _),

@@ -364,6 +364,8 @@ object Dedup {
             lit(0), (acc, x) => acc + x))
         .where(col("__agree") >= minAgree)
         .select("idA", "idB")
+        // a repeated doc id re-attaches one signature per copy
+        .dropDuplicates("idA", "idB")
     } else {
       val banded = capHotKeys(
         sigs.withColumn("__band",

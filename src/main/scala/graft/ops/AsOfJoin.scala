@@ -61,7 +61,9 @@ final case class BroadcastAsOf(maxRows: Int = 4000000) extends AsOfStrategy
   *  - each label row gets every feature's latest value with
   *    `feature.ts <= label.ts` (inclusive);
   *  - label rows with no qualifying feature row keep NULL (LEFT joins only);
-  *  - features/labels without a ts behave as epoch-0 constants;
+  *  - a feature without a ts is a per-entity constant (its max value); a
+  *    label without a ts gets each feature's overall latest value (lag
+  *    and TTL ignored in both cases);
   *  - ties on the max feature ts are broken deterministically:
   *    highest ts, then highest value (the reference leaves this unspecified —
   *    we pin it so results are reproducible and oracle-checkable);
@@ -73,9 +75,29 @@ object AsOfJoin {
   private final case class GroupKey(dfId: Int, entityCol: String, tsCol: Option[String],
                                     entityName: String, lagSeconds: Option[Long])
 
+  /** The probe of a label with no ts under [[SortMergeAsOf]]: the latest
+    * representable instant, so every feature row is visible and the merge
+    * picks each entity's overall latest value. */
+  private val EndOfTime: Column = timestamp_micros(lit(Long.MaxValue))
+
   /** Build a training set: one row per label row, feature columns named by
     * `FeatureSide.outputName`, label value in column `label` (reference P9
     * naming tsquery.go:53, 503).
+    *
+    * Under [[SortMergeAsOf]] every feature group is one [[graft.plans.AsOfMerge]]
+    * pass over one scan and one shuffle of its source:
+    *  - a lag shifts the label probe (`label.ts - lag`), not the feature
+    *    rows, and group values ride position-named struct fields — so
+    *    groups of one source that differ only in lag have identical
+    *    feature-side plans and share one exchange;
+    *  - features without a ts are NULL-ts groups: a NULL-ts row is visible
+    *    to every label, so the merge picks the entity's max value (when no
+    *    timestamped feature shuffles the label on their key, they take the
+    *    plain join below instead);
+    *  - a label with no ts probes at [[EndOfTime]], so each feature picks
+    *    its overall latest value.
+    * The cross-check strategies reduce ts-less features and no-label-ts
+    * builds with `Materialize.latest` and a plain LEFT join.
     *
     * @param mappings entityName -> label column holding that entity's key
     */
@@ -92,18 +114,26 @@ object AsOfJoin {
     features.foreach(f => require(mappings.contains(f.entityName),
       s"label has no entity mapping named ${f.entityName}"))
 
-    val lts = labelTsCol.map(col).getOrElse(Materialize.EpochZero)
-    var base = label.withColumn("__lts", lts)
+    val sortMerge = strategy == SortMergeAsOf
+    val lts = labelTsCol.map(col).getOrElse(
+      if (sortMerge) EndOfTime else Materialize.EpochZero)
+    val keep = (mappings.values.toSeq ++ labelTsCol :+ labelValueCol).distinct
+    var base = label.select(keep.map(col): _*).withColumn("__lts", lts)
 
-    // Features without their own ts are constants per entity: latest-value
-    // reduce then plain LEFT equi-join (reference P3, tsquery.go:354-383).
-    // When the LABEL has no ts, timestamped features also reduce to their
-    // overall latest value per entity (epoch-0 label sees everything in the
-    // reference's Spark path only if f.ts <= 0; but the no-label-ts builder
-    // explicitly uses the latest-value CTE — tsquery.go:518-593 — which is
-    // the semantics we implement).
-    val (plainJoin, asOf) = features.partition(f =>
-      f.tsCol.isEmpty || labelTsCol.isEmpty)
+    // Lag and TTL are as-of notions: without a feature ts or a label ts the
+    // feature is a per-entity latest value (reference tsquery.go:354-383,
+    // 518-593) and both are ignored. Under SortMergeAsOf a ts-less feature
+    // rides the merge only when a timestamped feature already shuffles the
+    // label on the same key; otherwise the plain join (broadcast when the
+    // feature side is small) leaves the label unshuffled: at sf0.1 on 4
+    // vCPUs, two ts-less merges over lineitem took 1.6 s, two joins 0.7 s.
+    val mergedKeys = features.filter(_.tsCol.isDefined).map(f => mappings(f.entityName)).toSet
+    val (plainJoin, asOf) = features
+      .map(f => if (f.tsCol.isEmpty || labelTsCol.isEmpty)
+        f.copy(lagSeconds = None, maxAgeSeconds = None) else f)
+      .partition(f =>
+        if (sortMerge) f.tsCol.isEmpty && !mergedKeys.contains(mappings(f.entityName))
+        else f.tsCol.isEmpty || labelTsCol.isEmpty)
 
     plainJoin.zipWithIndex.foreach { case (f, i) =>
       val reduced = Materialize.latest(f.df, f.entityCol, f.valueCol, f.tsCol)
@@ -122,16 +152,25 @@ object AsOfJoin {
     groups.zipWithIndex.foreach { case ((_, fs), gi) =>
       val g = fs.head
       val labelEntity = mappings(g.entityName)
+      // the label instant a feature row must not be later than
+      val probe = g.lagSeconds match {
+        case Some(s) =>
+          base = base.withColumn("__probe",
+            col("__lts") - expr(s"INTERVAL '$s' SECOND"))
+          "__probe"
+        case None => "__lts"
+      }
+      val fev = featureEvents(fs, base, labelEntity)
       strategy match {
         case SortMergeAsOf =>
           // appends the picked columns in the merge itself — no re-join
-          base = sortMergeGroup(base, labelEntity, fs)
+          base = sortMergeGroup(base, labelEntity, probe, fev, fs)
         case BroadcastAsOf(maxRows) =>
-          base = broadcastGroup(base, labelEntity, fs, maxRows)
+          base = broadcastGroup(base, labelEntity, probe, fev, fs, maxRows)
         case UnionWindow | JoinWindow =>
           val result = strategy match {
-            case UnionWindow => unionWindowGroup(base, labelEntity, fs)
-            case _           => joinWindowGroup(base, labelEntity, fs)
+            case UnionWindow => unionWindowGroup(base, labelEntity, probe, fev, fs)
+            case _           => joinWindowGroup(base, labelEntity, probe, fev, fs)
           }
           val hasTtl = fs.exists(_.maxAgeSeconds.isDefined)
           val renamed = result
@@ -139,16 +178,17 @@ object AsOfJoin {
             .withColumnRenamed("__gt", s"__gpt_$gi") // picked ts (TTL groups)
           base = base.join(renamed,
             base(labelEntity) === renamed(s"__ge_$gi") &&
-              base("__lts") === renamed(s"__gt_$gi"), "left")
+              base(probe) === renamed(s"__gt_$gi"), "left")
             .drop(s"__ge_$gi", s"__gt_$gi")
           if (hasTtl) {
             fs.filter(_.maxAgeSeconds.isDefined).foreach { f =>
               base = base.withColumn(f.outputName,
-                when(freshEnough(f, col(s"__gpt_$gi")), col(f.outputName)))
+                when(freshEnough(f, col(s"__gpt_$gi"), probe), col(f.outputName)))
             }
             base = base.drop(s"__gpt_$gi")
           }
       }
+      if (probe != "__lts") base = base.drop(probe)
     }
 
     val outCols: Seq[Column] =
@@ -159,43 +199,61 @@ object AsOfJoin {
     base.select(outCols: _*)
   }
 
-  /** Shifted, canonicalized feature event stream (one struct col for the
-    * group's values so one window pass serves all of them). When any group
-    * member has a TTL, the (shifted) event ts rides along as the LAST
-    * struct field `__gt` — last so tie-break struct comparisons (which only
-    * ever compare rows at EQUAL ts, hence equal `__gt`) are unchanged. */
-  private def featureEvents(fs: Seq[FeatureSide]): DataFrame = {
+  /** Canonicalized feature rows of one group: entity and ts cast to the
+    * label's types, values in one struct (one pass serves all of them)
+    * whose fields are named by POSITION — so two groups reading the same
+    * columns of one source have identical plans and share an exchange. A
+    * group without a ts gets a NULL ts. When any member has a TTL, the
+    * event ts rides along as the LAST struct field `__gt` — last so
+    * tie-break struct comparisons (which only ever compare rows at EQUAL
+    * ts, hence equal `__gt`) are unchanged. */
+  private def featureEvents(fs: Seq[FeatureSide], base: DataFrame,
+                            labelEntity: String): DataFrame = {
     val g = fs.head
-    val ts0 = col(g.tsCol.get)
-    val shifted = g.lagSeconds match {
-      case Some(s) => ts0 + expr(s"INTERVAL '$s' SECOND")
-      case None    => ts0
-    }
-    val valueFields = fs.map(f => col(f.valueCol).as(f.outputName)) ++
-      (if (fs.exists(_.maxAgeSeconds.isDefined)) Seq(shifted.as("__gt"))
-       else Nil)
+    val ts = g.tsCol.map(col).getOrElse(lit(null))
+      .cast(base.schema("__lts").dataType)
+    val valueFields = fs.indices.map(i => col(fs(i).valueCol).as(s"_$i")) ++
+      (if (fs.exists(_.maxAgeSeconds.isDefined)) Seq(ts.as("__gt")) else Nil)
     g.df.select(
-      col(g.entityCol).as("__e"),
-      shifted.as("__t"),
+      col(g.entityCol).cast(base.schema(labelEntity).dataType).as("__e"),
+      ts.as("__t"),
       struct(valueFields: _*).as("__v"))
   }
 
-  /** TTL mask: true when the picked (shifted) feature ts is within
-    * `maxAgeSeconds` of the label ts; features without a TTL are always
+  /** Struct field of feature `i` of a group in a picked value struct. */
+  private def field(struct: String, i: Int): Column = col(s"$struct._$i")
+
+  /** TTL mask: true when the picked feature ts is within `maxAgeSeconds`
+    * of the probe (`label ts - lag`); features without a TTL are always
     * fresh. `pickedTs` must resolve to the group's `__gt` field. */
-  private def freshEnough(f: FeatureSide, pickedTs: => Column): Column =
+  private def freshEnough(f: FeatureSide, pickedTs: => Column,
+                          probe: String): Column =
     f.maxAgeSeconds match {
-      case Some(a) => pickedTs >= col("__lts") - expr(s"INTERVAL '$a' SECOND")
+      case Some(a) => pickedTs >= col(probe) - expr(s"INTERVAL '$a' SECOND")
       case None    => lit(true)
     }
 
+  /** Keep the picked struct's values as the group's output columns, NULL
+    * where the label cannot pick (NULL entity; NULL probe for a timestamped
+    * group — the reference's equi-join semantics, which the re-joining
+    * strategies get from null rejection) or the TTL masks the pick. */
+  private def unpack(picked: DataFrame, labelEntity: String, probe: String,
+                     fs: Seq[FeatureSide]): DataFrame = {
+    val pickable = col(labelEntity).isNotNull &&
+      (if (fs.head.tsCol.isDefined) col(probe).isNotNull else lit(true))
+    fs.zipWithIndex.foldLeft(picked) { case (acc, (f, i)) =>
+      acc.withColumn(f.outputName,
+        when(pickable && freshEnough(f, col("__v.__gt"), probe), field("__v", i)))
+    }.drop("__v")
+  }
+
   /** UnionWindow: tag label keys, union with feature events, one
     * partitionBy(entity) sort, running `last(value ignoring nulls)`. */
-  private def unionWindowGroup(base: DataFrame, labelEntity: String,
-                               fs: Seq[FeatureSide]): DataFrame = {
-    val fev = featureEvents(fs).withColumn("__lbl", lit(0))
+  private def unionWindowGroup(base: DataFrame, labelEntity: String, probe: String,
+                               fev0: DataFrame, fs: Seq[FeatureSide]): DataFrame = {
+    val fev = fev0.withColumn("__lbl", lit(0))
     val lkeys = base
-      .select(col(labelEntity).as("__e"), col("__lts").as("__t")).distinct()
+      .select(col(labelEntity).as("__e"), col(probe).as("__t")).distinct()
       .withColumn("__v", lit(null).cast(fev.schema("__v").dataType))
       .withColumn("__lbl", lit(1))
     // Order: ts asc, label rows after feature rows at equal ts (inclusive
@@ -210,18 +268,17 @@ object AsOfJoin {
       Seq(col("__pick.__gt").as("__gt")) else Nil
     picked.select(
       (col("__e") +: col("__t") +:
-        (fs.map(f => col(s"__pick.${f.outputName}").as(f.outputName)) ++ gt)): _*)
+        (fs.indices.map(i => field("__pick", i).as(fs(i).outputName)) ++ gt)): _*)
   }
 
   /** SortMergeAsOf: plan the group through [[graft.plans.AsOfMerge]].
     * `base` rides the merge directly (every label row, all its columns) and
-    * comes back with the group's value struct appended — the `__lts` key is
-    * the merge's ts, so the UnionWindow distinct+re-join disappears. */
-  private def sortMergeGroup(base: DataFrame, labelEntity: String,
-                             fs: Seq[FeatureSide]): DataFrame = {
+    * comes back with the group's value struct appended — the probe is the
+    * merge's ts, so the UnionWindow distinct+re-join disappears. */
+  private def sortMergeGroup(base: DataFrame, labelEntity: String, probe: String,
+                             fev: DataFrame, fs: Seq[FeatureSide]): DataFrame = {
     val spark = base.sparkSession
-    ensureStrategy(spark)
-    val fev = featureEvents(fs)
+    graft.plans.AsOfMergeStrategy.ensureOn(spark)
     val lPlan = base.queryExecution.analyzed
     val rPlan = fev.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
@@ -229,56 +286,32 @@ object AsOfJoin {
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name in ${plan.output}"))
     val merged = graft.plans.AsOfMerge(lPlan, rPlan,
-      attr(lPlan, labelEntity), attr(lPlan, "__lts"),
+      attr(lPlan, labelEntity), attr(lPlan, probe),
       attr(rPlan, "__e"), attr(rPlan, "__t"), attr(rPlan, "__v"))
-    val out = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, merged)
-    // NULL label entity / NULL label ts keep NULL features — the reference's
-    // equi-join semantics (f.ts <= NULL is false; NULL entity joins nothing),
-    // which the other strategies get from their re-join's null rejection
-    val pickable = col(labelEntity).isNotNull && col("__lts").isNotNull
-    fs.foldLeft(out) { (acc, f) =>
-      acc.withColumn(f.outputName,
-        when(pickable && freshEnough(f, col("__v.__gt")),
-          col(s"__v.${f.outputName}")))
-    }.drop("__v")
+    unpack(org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, merged),
+      labelEntity, probe, fs)
   }
 
   /** BroadcastAsOf: per label row, a binary search into the broadcast
     * per-entity (ts, value) arrays — the label table never shuffles. Same
     * NULL masking as [[sortMergeGroup]]. */
-  private def broadcastGroup(base: DataFrame, labelEntity: String,
-                             fs: Seq[FeatureSide], maxRows: Int): DataFrame = {
-    val (table, valueType) =
-      graft.plans.AsOfBroadcast.buildTable(featureEvents(fs), maxRows)
+  private def broadcastGroup(base: DataFrame, labelEntity: String, probe: String,
+                             fev: DataFrame, fs: Seq[FeatureSide],
+                             maxRows: Int): DataFrame = {
+    val (table, valueType) = graft.plans.AsOfBroadcast.buildTable(fev, maxRows)
     val lookup = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.plans.AsOfBroadcastLookup(
         org.apache.spark.sql.graft.ColumnBridge.expression(col(labelEntity)),
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("__lts")),
+        org.apache.spark.sql.graft.ColumnBridge.expression(col(probe)),
         table, valueType))
-    val pickable = col(labelEntity).isNotNull && col("__lts").isNotNull
-    val withPick = base.withColumn("__v", lookup)
-    fs.foldLeft(withPick) { (acc, f) =>
-      acc.withColumn(f.outputName,
-        when(pickable && freshEnough(f, col("__v.__gt")),
-          col(s"__v.${f.outputName}")))
-    }.drop("__v")
-  }
-
-  /** Idempotently registers [[graft.plans.AsOfMergeStrategy]] on the
-    * session so the operator plans in sessions built WITHOUT
-    * `spark.sql.extensions=graft.GraftExtensions` (which also injects it). */
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(graft.plans.AsOfMergeStrategy))
-      spark.experimental.extraStrategies = cur :+ graft.plans.AsOfMergeStrategy
+    unpack(base.withColumn("__v", lookup), labelEntity, probe, fs)
   }
 
   /** JoinWindow (reference P2 shape): join + ROW_NUMBER()=1. */
-  private def joinWindowGroup(base: DataFrame, labelEntity: String,
-                              fs: Seq[FeatureSide]): DataFrame = {
-    val fev = featureEvents(fs)
+  private def joinWindowGroup(base: DataFrame, labelEntity: String, probe: String,
+                              fev: DataFrame, fs: Seq[FeatureSide]): DataFrame = {
     val lkeys = base
-      .select(col(labelEntity).as("__le"), col("__lts").as("__lt")).distinct()
+      .select(col(labelEntity).as("__le"), col(probe).as("__lt")).distinct()
     val joined = lkeys.join(fev,
       lkeys("__le") === fev("__e") && fev("__t") <= lkeys("__lt"), "left")
     val w = Window.partitionBy(col("__le"), col("__lt"))
@@ -288,6 +321,6 @@ object AsOfJoin {
     joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select(
         (col("__le").as("__e") +: col("__lt").as("__t") +:
-          (fs.map(f => col(s"__v.${f.outputName}").as(f.outputName)) ++ gt)): _*)
+          (fs.indices.map(i => field("__v", i).as(fs(i).outputName)) ++ gt)): _*)
   }
 }

@@ -16,17 +16,13 @@ import org.apache.spark.sql.functions._
   * the opposite direction so the anchor's own features can never contain
   * its label.
   *
-  * Scale shape: identical to the trailing bucket join, mirrored — with
-  * bucket width = the horizon H, every outcome event lands in exactly ONE
-  * (entity, floor(ts/H)) bucket and every anchor probes the TWO
-  * consecutive buckets covering (ts, ts + H]; the (big) outcome side never
-  * replicates, one shuffle per side, exact range predicate inside the
-  * join, partial-agg before the (entity, anchor_ts) rollup. A hot entity
-  * is a fat join key (AQE skew-split), not a fat per-entity sort.
+  * Scale shape: [[PitWindowAgg]]'s sort-merge kernel on negated time —
+  * one shuffle per side, one pass per partition, no (anchor × outcome)
+  * pairs.
   *
   * Float discipline: outcome sums in DECIMAL(18,2) cast to DOUBLE at the
   * end; anchors with no outcome keep (label = 0, n = 0, sum = 0.0,
-  * first_outcome_ms = NULL) via the left join-back.
+  * first_outcome_ms = NULL).
   */
 object LabelWindow {
 
@@ -36,35 +32,18 @@ object LabelWindow {
                    anchorTsCol: String, outcomeTsCol: String, valueCol: String,
                    horizonSec: Long): DataFrame = {
     require(horizonSec > 0, "horizon must be positive")
-    val h = lit(horizonSec * 1000000L)
-    def bkt(micros: org.apache.spark.sql.Column) =
-      call_function("div", micros - pmod(micros, h), h)
-
-    val out = outcomes.select(col(entityCol).as("__e"),
-        unix_micros(col(outcomeTsCol)).as("__ot"),
-        col(valueCol).cast("decimal(18,2)").as("__v"))
-      .withColumn("__bkt", bkt(col("__ot")))
-    // distinct BEFORE the bucket explode: duplicate anchors would
-    // double-join and double-count (same rule as the trailing side)
-    val anchorKeys = anchors.select(col(entityCol).as("__e"),
-      unix_micros(col(anchorTsCol)).as("__at")).distinct()
-    // (at, at + H]: covered buckets are floor((at+1)/H) and floor((at+H)/H)
-    // — two consecutive values (one when the window sits inside a bucket)
-    val ab = anchorKeys.withColumn("__bkt", explode(array_distinct(array(
-      bkt(col("__at") + 1), bkt(col("__at") + h)))))
-    val agg = ab.join(out, Seq("__e", "__bkt"))
-      .where(col("__ot") > col("__at") && col("__ot") <= col("__at") + h)
-      .groupBy(col("__e"), col("__at"))
-      .agg(count(lit(1)).as("n_outcomes"),
-        sum(col("__v")).as("__sum"),
-        min(col("__ot")).as("__first"))
-    anchorKeys
-      .join(agg, Seq("__e", "__at"), "left")
-      .select(col("__e").as(entityCol),
-        call_function("div", col("__at"), lit(1000L)).as("anchor_ts_ms"),
-        when(col("n_outcomes").isNotNull, 1L).otherwise(0L).as("label"),
-        coalesce(col("n_outcomes"), lit(0L)).as("n_outcomes"),
-        coalesce(col("__sum").cast("double"), lit(0.0)).as("sum_value"),
-        call_function("div", col("__first"), lit(1000L)).as("first_outcome_ms"))
+    // (at, at + H] on time is [-at - H, -at) on negated time: the trailing
+    // kernel's half-open window, and its latest event is the first outcome
+    def ms(negMicros: String) = call_function("div", -col(negMicros), lit(1000L))
+    val n = s"__n_$horizonSec"
+    PitWindowAgg.kernel(
+        anchors, col(entityCol), -unix_micros(col(anchorTsCol)),
+        outcomes, col(entityCol), -unix_micros(col(outcomeTsCol)), col(valueCol),
+        Seq(horizonSec))
+      .select(col("__e").as(entityCol), ms("__lt").as("anchor_ts_ms"),
+        when(col(n) > 0, 1L).otherwise(0L).as("label"),
+        col(n).as("n_outcomes"),
+        col(s"__s_$horizonSec").cast("double").as("sum_value"),
+        ms("__last").as("first_outcome_ms"))
   }
 }

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Point-in-time TRAILING-WINDOW aggregation features — the Feast/Tecton
   * "windowed aggregate feature" role the reference's latest-value
@@ -11,154 +13,86 @@ import org.apache.spark.sql.functions._
   * with event_ts in the half-open [ts − window, ts) — the label instant
   * itself EXCLUDED, the as-of join's no-leakage "<" discipline.
   *
-  * Scale shape: with bucket width = the window length W, every event lands
-  * in exactly ONE (entity, floor(ts/W)) bucket and every label probes TWO
-  * consecutive buckets — the label side duplicates 2×, the (big) event
-  * side never replicates. One shuffle per side on the (entity, bucket)
-  * key, exact range predicate inside the join, partial-agg before the
-  * final (entity, label_ts) rollup. No per-entity sort, no window
-  * function over event history — a skewed entity costs a fat join key
-  * (AQE skew-split territory), not a fat sort. (The RangeJoin
-  * bucketization argument specialized to fixed-width trailing windows.)
+  * Scale shape: one sort-merge kernel ([[graft.plans.TrailingWindowMerge]]).
+  * Labels and events are each shuffled once on entity and sorted by
+  * (entity, ts); one pass per partition slides a per-window front pointer
+  * over a ring of the entity's recent events. Cost is the two sorts plus a
+  * linear pass — no (label × event) pairs, so a hot entity costs its sort,
+  * not the square of its window mass; no join back to the label keys.
   *
-  * Float discipline: value sums run in DECIMAL(18,2) and cast to DOUBLE
-  * at the end (the oracle's money-math rule); zero-event labels emit
-  * (n_events = 0, sum_value = 0.0) via the left join-back, not dropped
-  * rows.
+  * Float discipline: value sums run in DECIMAL(18,2) (exact, 128-bit
+  * running sums) and cast to DOUBLE at the end (the oracle's money-math
+  * rule); zero-event labels emit (n_events = 0, sum_value = 0.0). One
+  * output row per DISTINCT (entity, label ts).
   */
 object PitWindowAgg {
 
-  /** (entity, label_ts_ms, n_events, sum_value) per label row. */
+  /** (entity, label_ts_ms, n_events, sum_value) per distinct label key. */
   def trailingAgg(labels: DataFrame, events: DataFrame, entityCol: String,
                   labelTsCol: String, eventTsCol: String, valueCol: String,
-                  windowSec: Long): DataFrame = {
-    require(windowSec > 0, "window must be positive")
-    val w = lit(windowSec * 1000000L)
-    def bkt(micros: org.apache.spark.sql.Column) =
-      call_function("div", micros - pmod(micros, w), w)
-
-    val ev = events.select(col(entityCol).as("__e"),
-        unix_micros(col(eventTsCol)).as("__et"),
-        col(valueCol).cast("decimal(18,2)").as("__v"))
-      .withColumn("__bkt", bkt(col("__et")))
-    // distinct BEFORE the bucket explode: duplicate label rows would
-    // otherwise double-join and double-count
-    val labelKeys = labels.select(col(entityCol).as("__e"),
-      unix_micros(col(labelTsCol)).as("__lt")).distinct()
-    // [lt-W, lt): covered buckets are floor((lt-W)/W) and floor((lt-1)/W)
-    // — two consecutive values (one when the window sits inside a bucket)
-    val lb = labelKeys.withColumn("__bkt", explode(array_distinct(array(
-      bkt(col("__lt") - w), bkt(col("__lt") - 1)))))
-    val agg = lb.join(ev, Seq("__e", "__bkt"))
-      .where(col("__et") >= col("__lt") - w && col("__et") < col("__lt"))
-      .groupBy(col("__e"), col("__lt"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("__v")).as("__sum"))
-    labelKeys
-      .join(agg, Seq("__e", "__lt"), "left")
-      .select(col("__e").as(entityCol),
-        call_function("div", col("__lt"), lit(1000L)).as("label_ts_ms"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        coalesce(col("__sum").cast("double"), lit(0.0)).as("sum_value"))
-  }
-
-  /** The SKEW-PATH variant of [[trailingAgg]] — same answer, different
-    * complexity class. The bucket join materializes (label × window-event)
-    * pairs, which is quadratic in a hot entity's window mass (one entity,
-    * 30% of events, one hour: the SkewBench scenario). COUNT/SUM are
-    * prefix-summable, so here each label needs only TWO cumulative
-    * lookups: union the event rows with two query points per label (at
-    * lt−1 and lt−W−1, integer-micro inclusive ≡ the half-open [lt−W, lt)),
-    * run ONE per-entity cumulative window over the union (events sort
-    * before points at the same instant), and subtract. Cost is the
-    * per-entity sort — n·log n for the hottest entity, no pair blowup.
-    * Prefer this when windows are long relative to event spacing or
-    * entities are skewed; the bucket join wins when windows are sparse. */
-  def trailingAggPrefix(labels: DataFrame, events: DataFrame,
-                        entityCol: String, labelTsCol: String,
-                        eventTsCol: String, valueCol: String,
-                        windowSec: Long): DataFrame = {
-    require(windowSec > 0, "window must be positive")
-    val w = windowSec * 1000000L
-    val labelKeys = labels.select(col(entityCol).as("__e"),
-      unix_micros(col(labelTsCol)).as("__lt")).distinct()
-    val pts = labelKeys
-      .select(col("__e"), col("__lt"), explode(array(
-        struct((col("__lt") - 1).as("t"), lit(1).as("sign")),
-        struct((col("__lt") - w - 1).as("t"), lit(-1).as("sign")))).as("__p"))
-      .select(col("__e"), col("__lt"), col("__p.t").as("__t"),
-        col("__p.sign").as("__sign"), lit(0L).as("__c"),
-        lit(null).cast("decimal(18,2)").as("__v"), lit(1).as("__kind"))
-    val ev = events.select(col(entityCol).as("__e"),
-      lit(null).cast("long").as("__lt"),
-      unix_micros(col(eventTsCol)).as("__t"), lit(0).as("__sign"),
-      lit(1L).as("__c"), col(valueCol).cast("decimal(18,2)").as("__v"),
-      lit(0).as("__kind"))
-    // events sort before points at the same __t (kind 0 < 1), so a point
-    // at lt-1 includes every event with et <= lt-1; point rows contribute
-    // nothing to either running total (__c = 0, __v = NULL)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__e")).orderBy(col("__t"), col("__kind"))
-      .rowsBetween(Long.MinValue, 0)
-    pts.unionByName(ev.select(pts.columns.map(col): _*))
-      .withColumn("__cc", sum(col("__c")).over(win))
-      .withColumn("__cv", sum(col("__v")).over(win))
-      .where(col("__kind") === 1)
-      .groupBy(col("__e"), col("__lt"))
-      .agg(sum(col("__sign") * col("__cc")).as("n_events"),
-        sum(when(col("__sign") === 1, coalesce(col("__cv"), lit(0)))
-          .otherwise(-coalesce(col("__cv"), lit(0)))).as("__sum"))
-      .select(col("__e").as(entityCol),
-        call_function("div", col("__lt"), lit(1000L)).as("label_ts_ms"),
-        col("n_events"),
-        coalesce(col("__sum").cast("double"), lit(0.0)).as("sum_value"))
-  }
+                  windowSec: Long): DataFrame =
+    trailing(labels, events, entityCol, labelTsCol, eventTsCol, valueCol,
+      Seq(windowSec))
+      .select(col("__e").as(entityCol), labelTsMs,
+        col(s"__n_$windowSec").as("n_events"),
+        col(s"__s_$windowSec").cast("double").as("sum_value"))
 
   /** The multi-window variant — feature sets ship as window LADDERS
-    * (1h/6h/24h/7d), and running [[trailingAgg]] per window would re-join
-    * per rung. Here the bucketing uses the LARGEST window once, each
-    * (label, event) pair inside it materializes once, and every rung is a
-    * conditional aggregate over that one join (`sum(when(et >= lt−Wᵢ))`)
-    * — one shuffle for the whole ladder, k windows = k extra agg
-    * expressions, zero extra joins. Output columns are suffixed by the
-    * window seconds: n_<w>, sum_<w>. */
+    * (1h/6h/24h/7d). Every rung rides the same merge pass (one more front
+    * pointer and running sum each), so k windows cost one shuffle per side
+    * like one window. Output columns are suffixed by the window seconds,
+    * ascending: n_<w>, sum_<w>. */
   def trailingAggLadder(labels: DataFrame, events: DataFrame,
                         entityCol: String, labelTsCol: String,
                         eventTsCol: String, valueCol: String,
                         windowsSec: Seq[Long]): DataFrame = {
-    require(windowsSec.nonEmpty && windowsSec.forall(_ > 0),
-      "windows must be positive")
     require(windowsSec.distinct.size == windowsSec.size,
       "duplicate window lengths")
-    val wMax = lit(windowsSec.max * 1000000L)
-    def bkt(micros: org.apache.spark.sql.Column) =
-      call_function("div", micros - pmod(micros, wMax), wMax)
+    val sorted = windowsSec.sorted
+    val outCols = sorted.flatMap { ws =>
+      Seq(col(s"__n_$ws").as(s"n_$ws"),
+        col(s"__s_$ws").cast("double").as(s"sum_$ws"))
+    }
+    trailing(labels, events, entityCol, labelTsCol, eventTsCol, valueCol, sorted)
+      .select((col("__e").as(entityCol) +: labelTsMs +: outCols): _*)
+  }
 
-    val ev = events.select(col(entityCol).as("__e"),
-        unix_micros(col(eventTsCol)).as("__et"),
-        col(valueCol).cast("decimal(18,2)").as("__v"))
-      .withColumn("__bkt", bkt(col("__et")))
-    val labelKeys = labels.select(col(entityCol).as("__e"),
-      unix_micros(col(labelTsCol)).as("__lt")).distinct()
-    val lb = labelKeys.withColumn("__bkt", explode(array_distinct(array(
-      bkt(col("__lt") - wMax), bkt(col("__lt") - 1)))))
-    val aggs = windowsSec.sorted.flatMap { ws =>
-      val inW = col("__et") >= col("__lt") - lit(ws * 1000000L)
-      Seq(sum(when(inW, 1L).otherwise(0L)).as(s"__n_$ws"),
-        sum(when(inW, col("__v"))).as(s"__s_$ws"))
+  private def labelTsMs =
+    call_function("div", col("__lt"), lit(1000L)).as("label_ts_ms")
+
+  private def trailing(labels: DataFrame, events: DataFrame, entityCol: String,
+                       labelTsCol: String, eventTsCol: String, valueCol: String,
+                       windowsSec: Seq[Long]): DataFrame =
+    kernel(labels, col(entityCol), unix_micros(col(labelTsCol)),
+      events, col(entityCol), unix_micros(col(eventTsCol)), col(valueCol),
+      windowsSec)
+
+  /** The [[graft.plans.TrailingWindowMerge]] operator over label keys
+    * (entity, micros) and events (entity, micros, value): columns `__e`,
+    * `__lt`, `__last` (micros of the latest event in the widest window),
+    * then `__n_<w>`, `__s_<w>` (DECIMAL(28,2)) per window. The event
+    * entity is cast to the label entity's type so both sides hash alike. */
+  private[ops] def kernel(labels: DataFrame, labelEntity: Column, labelMicros: Column,
+                          events: DataFrame, eventEntity: Column, eventMicros: Column,
+                          value: Column, windowsSec: Seq[Long]): DataFrame = {
+    require(windowsSec.nonEmpty && windowsSec.forall(_ > 0),
+      "windows must be positive")
+    val spark = labels.sparkSession
+    graft.plans.AsOfMergeStrategy.ensureOn(spark)
+    val l = labels.select(labelEntity.as("__e"), labelMicros.as("__lt"))
+    val ev = events.select(eventEntity.cast(l.schema("__e").dataType).as("__e"),
+      eventMicros.as("__et"), value.cast("decimal(18,2)").as("__v"))
+    val lp = l.queryExecution.analyzed
+    val rp = ev.queryExecution.analyzed
+    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+             name: String) = plan.output.find(_.name == name).get
+    val aggs = AttributeReference("__last", LongType)() +: windowsSec.flatMap { ws =>
+      Seq(AttributeReference(s"__n_$ws", LongType, nullable = false)(),
+        AttributeReference(s"__s_$ws", DecimalType(28, 2), nullable = false)())
     }
-    val agg = lb.join(ev, Seq("__e", "__bkt"))
-      .where(col("__et") >= col("__lt") - wMax && col("__et") < col("__lt"))
-      .groupBy(col("__e"), col("__lt"))
-      .agg(aggs.head, aggs.tail: _*)
-    val outCols = windowsSec.sorted.flatMap { ws =>
-      Seq(coalesce(col(s"__n_$ws"), lit(0L)).as(s"n_$ws"),
-        coalesce(col(s"__s_$ws").cast("double"), lit(0.0)).as(s"sum_$ws"))
-    }
-    labelKeys
-      .join(agg, Seq("__e", "__lt"), "left")
-      .select((col("__e").as(entityCol) +:
-        call_function("div", col("__lt"), lit(1000L)).as("label_ts_ms") +:
-        outCols): _*)
+    org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
+      graft.plans.TrailingWindowMerge(lp, rp, attr(lp, "__e"), attr(lp, "__lt"),
+        attr(rp, "__e"), attr(rp, "__et"), attr(rp, "__v"),
+        windowsSec.map(_ * 1000000L), aggs))
   }
 }

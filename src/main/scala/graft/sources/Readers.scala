@@ -40,30 +40,35 @@ object Readers {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Normalize a parquet timestamp column to session-TZ (UTC) micros
-    * TIMESTAMP regardless of how the file encodes it:
+  /** Parquet scan that reads every naive (TIMESTAMP_NTZ) column as a
+    * TIMESTAMP instant: the column's raw micros become epoch-UTC micros at
+    * the scan, in any session time zone — DuckDB's reading of naive
+    * parquet timestamps. A `cast("timestamp")` after the scan would instead
+    * convert each row from the session zone (a per-row `convertTz`, and
+    * shifted instants in a non-UTC session). The re-read with an explicit
+    * schema launches no job beyond the plain read's schema inference. */
+  def parquetAsInstants(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
+    val df = spark.read.parquet(path)
+    if (!df.schema.exists(_.dataType == TimestampNTZType)) df
+    else spark.read.schema(StructType(df.schema.map(f =>
+      if (f.dataType == TimestampNTZType) f.copy(dataType = TimestampType) else f)))
+      .parquet(path)
+  }
+
+  /** The harness `events` table with `ts` as a micros TIMESTAMP instant
+    * regardless of how the file encodes it:
     *  - INT64 NANOS (read as raw long under `nanosAsLong`): integer-divide
     *    to micros — the truncation DuckDB's `CAST(ts_ns AS TIMESTAMP)`
     *    applies;
-    *  - micros TIMESTAMP_NTZ (plain parquet timestamp, NTZ inference on):
-    *    cast — identity on the instant in a UTC session, matching DuckDB's
-    *    epoch-UTC reading of naive parquet timestamps;
-    *  - already TIMESTAMP: untouched. */
-  def normalizeTs(df: DataFrame, c: String): DataFrame =
-    df.schema(c).dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn(c,
-          org.apache.spark.sql.functions.expr(s"timestamp_micros($c div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn(c, org.apache.spark.sql.functions.col(c).cast("timestamp"))
-      case _ => df
-    }
-
-  /** The harness `events` table with `ts` normalized via [[normalizeTs]].
-    * Encoding-agnostic: testdata snapshots have shipped both nanos and
-    * micros timestamps across rounds. */
+    *  - micros TIMESTAMP_NTZ (plain parquet timestamp): read as an
+    *    instant at the scan ([[parquetAsInstants]]).
+    * Testdata snapshots have shipped both encodings across rounds. */
   def eventsNormalized(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"), "ts")
+    val df = parquetAsInstants(spark, s"$sfDir/events.parquet")
+    if (df.schema("ts").dataType != org.apache.spark.sql.types.LongType) df
+    else df.withColumn("ts",
+      org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
   }
 }

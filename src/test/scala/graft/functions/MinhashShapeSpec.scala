@@ -26,6 +26,18 @@ class MinhashShapeSpec extends SparkSpec {
     assert(wide == inline)
   }
 
+  test("minhashNearDups: wide and inline shapes agree on a repeated doc id") {
+    // a copy of every 7th document under the same id: both shapes must
+    // emit the same rows, each candidate pair verified once per text pair
+    val dup = docs.union(docs.filter(col("doc_id") % 7 === 0))
+    def run(shape: Boolean) = Dedup.minhashNearDupsImpl(dup, "text", "doc_id",
+        5, 64, 16, 0.8, false, 2000, wideShape = Some(shape))
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    val inline = run(false)
+    assert(inline.nonEmpty, "fixture must produce pairs")
+    assert(run(true) == inline)
+  }
+
   test("minhashNearDupsIncremental: wide and inline shapes agree " +
       "(threshold 0.5, dense candidates)") {
     val isNew = col("doc_id") % 5 === 4

@@ -3,6 +3,7 @@ package graft.ops
 import java.sql.Timestamp
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
+import org.apache.spark.sql.functions.unix_micros
 
 /** Property tests for the as-of join invariants (SURVEY.md §5):
   * `f.ts <= l.ts` inclusive, NULL padding, deterministic tie semantics, and
@@ -49,6 +50,41 @@ class AsOfPropertySpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(res.passed, res.toString)
   }
+
+  test("lag, TTL, ts-less and no-label-ts features agree across strategies") {
+    val rnd = new scala.util.Random(451L)
+    def opt[A](p: Double)(a: => A): Option[A] =
+      if (rnd.nextDouble() < p) None else Some(a)
+    for (round <- 0 until 4) {
+      // NULL entities and values on both sides, NULL label ts; feature ts
+      // stays non-NULL (JoinWindow's join drops NULL-ts feature rows, the
+      // other strategies treat them as epoch-minus-infinity)
+      val feat = Seq.fill(40)((opt(0.1)(rnd.nextInt(5).toLong),
+          toTs(rnd.nextInt(20).toLong), opt(0.1)(rnd.nextInt(50).toDouble)))
+        .toDF("fe", "fts", "fv")
+      val dim = Seq.fill(8)((opt(0.1)(rnd.nextInt(6).toLong),
+          opt(0.2)(rnd.nextInt(50).toDouble))).toDF("de", "dv")
+      val label = Seq.fill(if (round == 0) 0 else 30)((opt(0.1)(rnd.nextInt(6).toLong),
+          opt(0.1)(toTs(rnd.nextInt(25).toLong)), rnd.nextInt(9).toDouble))
+        .toDF("le", "lts", "lv")
+      val feats = Seq(
+        FeatureSide(feat, "fe", "fv", Some("fts"), "f"),
+        FeatureSide(feat, "fe", "fv", Some("fts"), "f_lag", lagSeconds = Some(3L)),
+        FeatureSide(feat, "fe", "fv", Some("fts"), "f_ttl", maxAgeSeconds = Some(4L)),
+        FeatureSide(feat, "fe", "fv", Some("fts"), "f_lag_ttl",
+          lagSeconds = Some(2L), maxAgeSeconds = Some(5L)),
+        FeatureSide(dim, "de", "dv", None, "f_dim", maxAgeSeconds = Some(1L)))
+      for (labelTs <- Seq(Some("lts"), None)) {
+        def run(st: AsOfStrategy) = AsOfJoin.trainingSet(label,
+            Map("entity" -> "le"), "lv", labelTs, feats, st)
+          .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+        val merge = run(SortMergeAsOf)
+        assert(merge.size == label.count(), s"round $round, label ts $labelTs")
+        assert(merge == run(UnionWindow), s"round $round, label ts $labelTs")
+        assert(merge == run(JoinWindow), s"round $round, label ts $labelTs")
+      }
+    }
+  }
 }
 
 class UpsertSpec extends SparkSpec {
@@ -70,6 +106,22 @@ class UpsertSpec extends SparkSpec {
 
 class ReadersSpec extends SparkSpec {
   import spark.implicits._
+
+  test("naive parquet timestamps read as the same instants in any session zone") {
+    def micros(tz: String) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", tz)
+      def jobs(register: => org.apache.spark.sql.DataFrame) =
+        org.apache.spark.graft.PlanCounters.measure(s.sparkContext)(register.schema: Unit)._1
+      // registration costs only the plain read's schema-inference job
+      assert(jobs(graft.sources.Readers.eventsNormalized(s, sf001)) ==
+        jobs(s.read.parquet(s"$sf001/events.parquet")))
+      graft.sources.Readers.eventsNormalized(s, sf001)
+        .select($"event_id", unix_micros($"ts")).as[(Long, Long)].collect().toMap
+    }
+    val utc = micros("UTC")
+    assert(utc.nonEmpty && micros("America/Los_Angeles") == utc)
+  }
 
   test("CSV write/read round-trip (S1/K2)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property tests for the forward label window: for ANY anchor set,
-  * outcome set, and horizon, the bucket-join result equals the brute-force
-  * cross-join filter over (ts, ts+H] — the bucket decomposition and the
-  * left-join-back defaults must be invisible. */
+  * outcome set, and horizon, the result equals the brute-force
+  * cross-join filter over (ts, ts+H], zero-outcome defaults included. */
 class LabelWindowPropertySpec extends SparkSpec {
   import spark.implicits._
 

@@ -33,27 +33,52 @@ class PitWindowAggSpec extends SparkSpec {
       (3L, 150000L)  -> ((2L, 48.0))))
   }
 
-  test("prefix-sum path equals the bucket join, boundaries included") {
-    val labels = Seq((1L, ts(1000)), (2L, ts(1000)), (3L, ts(150)))
-      .toDF("entity", "ts")
-    val events = Seq(
-      (1L, 1.0, ts(900)), (1L, 2.0, ts(999)), (1L, 4.0, ts(1000)),
-      (1L, 8.0, ts(899)), (3L, 16.0, ts(50)), (3L, 32.0, ts(149)),
-      (3L, 64.0, ts(150))).toDF("entity", "value", "ts")
-    val a = PitWindowAgg.trailingAgg(labels, events, "entity", "ts", "ts",
-      "value", 100L).as[(Long, Long, Long, Double)].collect().toSet
-    val b = PitWindowAgg.trailingAggPrefix(labels, events, "entity", "ts",
-      "ts", "value", 100L).as[(Long, Long, Long, Double)].collect().toSet
-    assert(a == b && a.nonEmpty)
-    // and on real data
-    val ev = graft.sources.Readers.eventsNormalized(spark, sf001)
-    val l2 = ev.filter($"event_type" === "purchase")
-    val c2 = ev.filter($"event_type" === "click")
-    val fast = PitWindowAgg.trailingAgg(l2, c2, "user_id", "ts", "ts",
-      "value", 7200L).as[(Long, Long, Long, Double)].collect().toSet
-    val pre = PitWindowAgg.trailingAggPrefix(l2, c2, "user_id", "ts", "ts",
-      "value", 7200L).as[(Long, Long, Long, Double)].collect().toSet
-    assert(fast == pre)
+  /** Brute-force reference: per DISTINCT (entity, ts) label key, events of
+    * the same entity with lt - w <= et < lt counted and DECIMAL-summed;
+    * NULL entity or ts labels get (0, 0.0); NULL-ts events are in no
+    * window; NULL values count but add nothing. */
+  private def reference(labels: Seq[(Option[Long], Option[Long])],
+                        events: Seq[(Option[Long], Option[Long], Option[Double])],
+                        w: Long): Seq[(Option[Long], Option[Long], Long, Double)] =
+    labels.distinct.map { case (e, t) =>
+      val in = for ((ee, et, v) <- events; le <- e; lt <- t; x <- ee; y <- et
+                    if x == le && y >= lt - w && y < lt) yield v
+      (e, t.map(_ * 1000L), in.size.toLong,
+        in.flatten.map(BigDecimal(_).setScale(2)).sum.toDouble)
+    }.sortBy(_.toString)
+
+  test("kernel matches a brute-force reference on random inputs") {
+    val rnd = new scala.util.Random(20261018L)
+    def opt[A](p: Double)(a: => A): Option[A] =
+      if (rnd.nextDouble() < p) None else Some(a)
+    // entity 0 is hot: ~half of all events. Timestamps are whole seconds
+    // over a short range with w = 5, so et == lt - w (included) and
+    // et == lt (excluded) both occur; labels repeat.
+    def entity() = if (rnd.nextBoolean()) 0L else rnd.nextInt(5).toLong
+    val windows = Seq(3L, 5L, 11L)
+    for (round <- 0 until 10) {
+      val nl = if (round == 0) 0 else 5 + rnd.nextInt(30)
+      val ne = if (round == 1) 0 else 20 + rnd.nextInt(80)
+      val labels = Seq.fill(nl)((opt(0.1)(entity()), opt(0.1)(rnd.nextInt(30).toLong)))
+      val events = Seq.fill(ne)((opt(0.1)(entity()), opt(0.1)(rnd.nextInt(30).toLong),
+        opt(0.15)(rnd.nextInt(400) / 4.0)))
+      val ldf = labels.map { case (e, t) => (e, t.map(ts)) }.toDF("entity", "ts")
+      val edf = events.map { case (e, t, v) => (e, t.map(ts), v) }
+        .toDF("entity", "ts", "value")
+      val got = PitWindowAgg.trailingAgg(ldf, edf, "entity", "ts", "ts", "value", 5L)
+        .as[(Option[Long], Option[Long], Long, Double)].collect().toSeq.sortBy(_.toString)
+      assert(got == reference(labels, events, 5L), s"round $round")
+      val ladder = PitWindowAgg.trailingAggLadder(ldf, edf, "entity", "ts", "ts",
+          "value", windows.reverse)
+        .as[(Option[Long], Option[Long], Long, Double, Long, Double, Long, Double)]
+        .collect().toSeq
+      assert(ladder.map(_.productIterator.toSeq.take(2)).distinct.size == ladder.size)
+      windows.zipWithIndex.foreach { case (w, i) =>
+        val rung = ladder.map(r => (r._1, r._2, r.productElement(2 + 2 * i),
+          r.productElement(3 + 2 * i))).sortBy(_.toString)
+        assert(rung == reference(labels, events, w), s"round $round, window $w")
+      }
+    }
   }
 
   test("ladder rungs equal independent single-window runs") {

@@ -90,6 +90,27 @@ class SkewScaleSpec extends SparkSpec {
     assert(merge((7L, ts(27 * 13 + 1).getTime)).isDefined)
   }
 
+  test("trailing-window kernel: one entity owns half the history") {
+    def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
+    // entity 7: 500 events one second apart, 40 labels inside that run
+    val evs = (0 until 500).map(i => (7L, i.toLong, (i % 13).toDouble)) ++
+      (1 to 50).flatMap(e => (0 until 5).map(i => (e + 100L, i * 97L, e + i / 4.0)))
+    val lbls = (0 until 40).map(i => (7L, i * 13L + 1)) ++
+      (1 to 50).map(e => (e + 100L, 250L))
+    val got = PitWindowAgg.trailingAgg(
+        lbls.map(l => (l._1, ts(l._2))).toDF("e", "ts"),
+        evs.map(v => (v._1, v._3, ts(v._2))).toDF("e", "value", "ts"),
+        "e", "ts", "ts", "value", windowSec = 120L)
+      .as[(Long, Long, Long, Double)].collect().toSet
+    val want = lbls.distinct.map { case (e, t) =>
+      val in = evs.filter(v => v._1 == e && v._2 >= t - 120 && v._2 < t).map(_._3)
+      (e, 1700000000000L + t * 1000, in.size.toLong, in.sum)
+    }.toSet
+    assert(got == want)
+    // the hot entity's late labels see a full 120-event window
+    assert(got.exists { case (e, _, n, _) => e == 7L && n == 120L })
+  }
+
   test("inverted intervals match nothing and do not explode the bucket array") {
     def ts(s: String) = Timestamp.valueOf(s)
     val pts = Seq((1L, ts("2024-01-15 12:00:00"))).toDF("pid", "pts")
